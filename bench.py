@@ -21,23 +21,24 @@ full-suite artifact.
 
 Cache-dependent per-query times (r8 shared-cache roster, CLAUDE.md): these
 HEADLINE queries' individual numbers depend on SUITE ORDER because an
-earlier query may have warmed a shared (session, sf_dir) cache — read
+earlier query may have warmed a shared `session_cache` slot — read
 their per-query movers against that, not as algorithmic changes (the
 suite TOTAL is always honest):
 
-  query                 warmed by / shared frame
+  query                 warmed by / shared frame (slot name)
   --------------------  -------------------------------------------------
   dedup_minhash_verified pays the warming cost for the pair-list +
                          shingle caches the queries below reuse
-  dedup_minhash_lsh      MinHash candidate pair list (_MH_PAIRS_CACHE)
+  dedup_minhash_lsh      MinHash candidate pair list ("minhash_pairs")
   dedup_clusters         same pair list
-  dedup_ngram_jaccard    distinct-shingles frame (_SHINGLE_CACHE)
-  text_lang_id_confusion pinned confusion matrix (_CONFUSION_CACHE, r9;
+  dedup_ngram_jaccard    distinct-shingles frame ("shingle_keys")
+  text_lang_id_confusion pinned confusion matrix ("lang_id_confusion";
                          warms text_lang_id_macro_f1 in the full suite)
 
 In the FULL suite the trigram/hashed-score/survivors caches make the
 text_lm_surprisal, quality_perplexity_buckets, scoring, and bias-audit
-families order-dependent the same way (SCALE.md "cache roster").
+families order-dependent the same way (SCALE.md "Shared-frame cache
+roster").
 """
 
 from __future__ import annotations

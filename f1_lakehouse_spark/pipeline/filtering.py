@@ -29,6 +29,7 @@ from f1_lakehouse_spark.pipeline.hashing import (
     sql_md5_hash48,
 )
 from f1_lakehouse_spark.registry import register
+from f1_lakehouse_spark.session import session_cache
 from f1_lakehouse_spark.tables import load_table
 
 # --- benchmark decontamination ------------------------------------------------------
@@ -85,59 +86,52 @@ LEFT JOIN hits h USING (doc_id)
     tags=("pipeline", "filtering", "decontam"),
 )
 def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shared (session, input)-keyed persisted cache: called by its own
-    # query AND the survivor composition; the previous per-call persist
-    # (kept for the bench/verify double-read) accumulated one persisted
-    # copy per invocation — a storage leak pattern at 100 TB
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DECONTAM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_DECONTAM_CACHE):
-        _DECONTAM_CACHE.pop(old_key).unpersist()
-    d = load_table(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.split("text", " ").alias("ws"),
-        (
-            spark_salted_hash("doc_id", ":bench") % BENCH_MOD
-        ).alias("bench_slot"),
-    )
-    gram_arr = F.transform(
-        F.sequence(F.lit(1), F.size("ws") - F.lit(DECONTAM_N - 1)),
-        lambda i: spark_md5_hash48(
-            F.concat_ws(" ", F.slice("ws", i, F.lit(DECONTAM_N)))
-        ),
-    )
-    # bench and hits both derive from the gram explode (the dominant cost):
-    # persist AND materialize before the self-join (CLAUDE.md convention)
-    grams = (
-        base.filter(F.size("ws") >= DECONTAM_N)
-        .select("doc_id", "bench_slot", F.explode(gram_arr).alias("g"))
-        .distinct()
-        .persist()
-    )
-    grams.count()
-    bench = grams.filter(F.col("bench_slot") == 0).select("g").distinct()
-    hits = (
-        grams.filter(F.col("bench_slot") != 0)
-        .join(F.broadcast(bench), "g")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_overlap"))
-    )
-    train = base.filter(F.col("bench_slot") != 0).select("doc_id")
-    out = train.join(hits, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_overlap"), F.lit(0)).cast("long").alias("n_overlap_grams"),
-        F.when(F.coalesce(F.col("n_overlap"), F.lit(0)) > 0, 1)
-        .otherwise(0)
-        .alias("contaminated"),
-    )
-    out = out.persist()
-    out.count()
-    grams.unpersist()
-    _DECONTAM_CACHE[key] = out
-    return out
+    # session-cached: called by its own query AND the survivor composition
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        base = d.select(
+            "doc_id",
+            F.split("text", " ").alias("ws"),
+            (
+                spark_salted_hash("doc_id", ":bench") % BENCH_MOD
+            ).alias("bench_slot"),
+        )
+        gram_arr = F.transform(
+            F.sequence(F.lit(1), F.size("ws") - F.lit(DECONTAM_N - 1)),
+            lambda i: spark_md5_hash48(
+                F.concat_ws(" ", F.slice("ws", i, F.lit(DECONTAM_N)))
+            ),
+        )
+        # bench and hits both derive from the gram explode (the dominant cost):
+        # persist AND materialize before the self-join (CLAUDE.md convention)
+        grams = (
+            base.filter(F.size("ws") >= DECONTAM_N)
+            .select("doc_id", "bench_slot", F.explode(gram_arr).alias("g"))
+            .distinct()
+            .persist()
+        )
+        grams.count()
+        bench = grams.filter(F.col("bench_slot") == 0).select("g").distinct()
+        hits = (
+            grams.filter(F.col("bench_slot") != 0)
+            .join(F.broadcast(bench), "g")
+            .groupBy("doc_id")
+            .agg(F.count("*").alias("n_overlap"))
+        )
+        train = base.filter(F.col("bench_slot") != 0).select("doc_id")
+        out = train.join(hits, "doc_id", "left").select(
+            "doc_id",
+            F.coalesce(F.col("n_overlap"), F.lit(0)).cast("long").alias("n_overlap_grams"),
+            F.when(F.coalesce(F.col("n_overlap"), F.lit(0)) > 0, 1)
+            .otherwise(0)
+            .alias("contaminated"),
+        )
+        out = out.persist()
+        out.count()
+        grams.unpersist()
+        return out
+
+    return session_cache("decontam", spark, sf_dir, build)
 
 
 # --- Gopher-style repetition filters ------------------------------------------------
@@ -185,68 +179,62 @@ FROM feats
     tags=("pipeline", "filtering", "quality"),
 )
 def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11: session-cached (the cache-roster convention, SCALE.md): eleven
-    # queries consume this label frame (every scoring_* evaluation joins
-    # the gopher gate), and the top-word statistic is an interpreted
-    # nested-HOF pass (O(words²) per doc) that cost ~0.8 s per CALL at
-    # sf0.1 — one persisted entry per (session, input), rolled over on
-    # input change; borrowed by consumers (never unpersisted by them).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GOPHER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    d = load_table(spark, sf_dir, "documents")
-    # materialize ws as a real column first so lambdas reference a column,
-    # not a re-evaluated split() expression (see CLAUDE.md determinism note)
-    base = d.select("doc_id", F.split("text", " ").alias("ws"))
-    n = F.size("ws")
-    top_count = F.array_max(
-        F.transform(
-            F.array_distinct("ws"),
-            lambda w: F.size(F.filter("ws", lambda x: x == w)),
+    # r11: session-cached: eleven queries consume this label frame (every
+    # scoring_* evaluation joins the gopher gate), and the top-word
+    # statistic is an interpreted nested-HOF pass (O(words²) per doc) that
+    # cost ~0.8 s per CALL at sf0.1
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # materialize ws as a real column first so lambdas reference a column,
+        # not a re-evaluated split() expression (see CLAUDE.md determinism note)
+        base = d.select("doc_id", F.split("text", " ").alias("ws"))
+        n = F.size("ws")
+        top_count = F.array_max(
+            F.transform(
+                F.array_distinct("ws"),
+                lambda w: F.size(F.filter("ws", lambda x: x == w)),
+            )
         )
-    )
-    bigrams = F.transform(
-        F.sequence(F.lit(1), n - F.lit(1)),
-        lambda i: F.concat(
-            F.element_at("ws", i), F.lit(" "), F.element_at("ws", i + F.lit(1))
-        ),
-    )
-    feats = base.select(
-        "doc_id",
-        n.alias("n_words"),
-        (F.lit(1.0) - F.size(F.array_distinct("ws")).cast("double") / n).alias(
-            "dup_word_frac"
-        ),
-        (top_count.cast("double") / n).alias("top_word_frac"),
-        F.when(n < 2, F.lit(0.0))
-        .otherwise(
-            F.lit(1.0)
-            - F.size(F.array_distinct(bigrams)).cast("double") / (n - F.lit(1))
+        bigrams = F.transform(
+            F.sequence(F.lit(1), n - F.lit(1)),
+            lambda i: F.concat(
+                F.element_at("ws", i), F.lit(" "), F.element_at("ws", i + F.lit(1))
+            ),
         )
-        .alias("dup_bigram_frac"),
-    )
-    out = feats.select(
-        "doc_id",
-        "n_words",
-        "dup_word_frac",
-        "top_word_frac",
-        "dup_bigram_frac",
-        F.when(
-            (F.col("dup_word_frac") <= REP_MAX_DUP_WORD)
-            & (F.col("top_word_frac") <= REP_MAX_TOP_WORD)
-            & (F.col("dup_bigram_frac") <= REP_MAX_DUP_BIGRAM),
-            1,
+        feats = base.select(
+            "doc_id",
+            n.alias("n_words"),
+            (F.lit(1.0) - F.size(F.array_distinct("ws")).cast("double") / n).alias(
+                "dup_word_frac"
+            ),
+            (top_count.cast("double") / n).alias("top_word_frac"),
+            F.when(n < 2, F.lit(0.0))
+            .otherwise(
+                F.lit(1.0)
+                - F.size(F.array_distinct(bigrams)).cast("double") / (n - F.lit(1))
+            )
+            .alias("dup_bigram_frac"),
         )
-        .otherwise(0)
-        .alias("passes_repetition"),
-    )
-    for old_key in list(_GOPHER_CACHE):
-        _GOPHER_CACHE.pop(old_key).unpersist()
-    out = out.persist()
-    out.count()
-    _GOPHER_CACHE[key] = out
-    return out
+        out = feats.select(
+            "doc_id",
+            "n_words",
+            "dup_word_frac",
+            "top_word_frac",
+            "dup_bigram_frac",
+            F.when(
+                (F.col("dup_word_frac") <= REP_MAX_DUP_WORD)
+                & (F.col("top_word_frac") <= REP_MAX_TOP_WORD)
+                & (F.col("dup_bigram_frac") <= REP_MAX_DUP_BIGRAM),
+                1,
+            )
+            .otherwise(0)
+            .alias("passes_repetition"),
+        )
+        out = out.persist()
+        out.count()
+        return out
+
+    return session_cache("gopher_labels", spark, sf_dir, build)
 
 
 # --- PII scrub (canary-validated) ---------------------------------------------------
@@ -346,14 +334,6 @@ from f1_lakehouse_spark.pipeline import dedup as _dedup  # noqa: E402  (after re
 from f1_lakehouse_spark.registry import REGISTRY as _REGISTRY  # noqa: E402
 
 
-_DECONTAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# (session, input) -> persisted gopher label frame (r11; see
-# quality_gopher_repetition — eleven consumers join this gate)
-_GOPHER_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SURVIVORS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "pipeline_corpus_survivors",
     oracle=f"""
@@ -383,48 +363,43 @@ JOIN dec USING (doc_id)
     tags=("pipeline", "filtering", "compose"),
 )
 def pipeline_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-entry (session, input)-keyed persisted cache (the
-    # char_trigram_frame convention): the composed pipeline re-runs the
-    # dedup candidate+verify, gopher, and decontam stages — its one other
+    # session-cached: the composed pipeline re-runs the dedup
+    # candidate+verify, gopher, and decontam stages — its one other
     # consumer (filtering_bias_audit) audits the SAME survivors, so the
     # three stages should run once per corpus, not once per query
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SURVIVORS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_SURVIVORS_CACHE):
-        _SURVIVORS_CACHE.pop(old_key).unpersist()
-    kept = (
-        _dedup.dedup_keep_list(spark, sf_dir)
-        .filter(F.col("keep") == 1)
-        .select("doc_id")
-    )
-    rep = (
-        quality_gopher_repetition(spark, sf_dir)
-        .filter(F.col("passes_repetition") == 1)
-        .select("doc_id")
-    )
-    dec = (
-        decontam_ngram_overlap(spark, sf_dir)
-        .filter(F.col("contaminated") == 0)
-        .select("doc_id")
-    )
-    d = load_table(spark, sf_dir, "documents")
-    out = (
-        d.join(kept, "doc_id")
-        .join(rep, "doc_id")
-        .join(dec, "doc_id")
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+    def build() -> DataFrame:
+        kept = (
+            _dedup.dedup_keep_list(spark, sf_dir)
+            .filter(F.col("keep") == 1)
+            .select("doc_id")
         )
-    )
-    out = out.persist()
-    out.count()
-    _SURVIVORS_CACHE[key] = out
-    return out
+        rep = (
+            quality_gopher_repetition(spark, sf_dir)
+            .filter(F.col("passes_repetition") == 1)
+            .select("doc_id")
+        )
+        dec = (
+            decontam_ngram_overlap(spark, sf_dir)
+            .filter(F.col("contaminated") == 0)
+            .select("doc_id")
+        )
+        d = load_table(spark, sf_dir, "documents")
+        out = (
+            d.join(kept, "doc_id")
+            .join(rep, "doc_id")
+            .join(dec, "doc_id")
+            .select(
+                "doc_id",
+                "lang",
+                "source",
+                F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+            )
+        )
+        out = out.persist()
+        out.count()
+        return out
+
+    return session_cache("corpus_survivors", spark, sf_dir, build)
 
 
 # --- contamination provenance (the auditor's inverse report) ---------------------------

@@ -34,6 +34,7 @@ from f1_lakehouse_spark.pipeline.hashing import (
     sql_salted_hash,
 )
 from f1_lakehouse_spark.registry import register
+from f1_lakehouse_spark.session import session_cache
 from f1_lakehouse_spark.tables import load_table
 
 DSIR_B = 1024  # hash buckets per n-gram model
@@ -355,65 +356,55 @@ def scoring_hashed_linear_quality(spark: SparkSession, sf_dir: str) -> DataFrame
 # conformal-style joins in round6_stats) start from this identical per-doc
 # frame, and the per-gram md5 fold behind it is the single most expensive
 # map stage in the scoring family — while the RESULT is six narrow columns
-# per document. Same single-entry (session, input)-keyed persisted cache
-# as text.char_trigram_frame (CLAUDE.md shared-frame convention: never
-# unpersisted inside a query fn; rolls over on input change).
-
-_SCORE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# per document.
 def hashed_score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SCORE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_SCORE_CACHE):
-        _SCORE_CACHE.pop(old_key).unpersist()
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.filter(F.col("text").isNotNull()).select(
-        "doc_id", "lang", F.split("text", " ").alias("ws")
-    )
-    ws = F.col("ws")
-    bigrams = F.when(
-        F.size(ws) >= 2,  # ascending-sequence guard (see text.py)
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - F.lit(1)),
-            lambda i: F.concat_ws(
-                " ", F.element_at(ws, i), F.element_at(ws, i + F.lit(1))
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        toks = d.filter(F.col("text").isNotNull()).select(
+            "doc_id", "lang", F.split("text", " ").alias("ws")
+        )
+        ws = F.col("ws")
+        bigrams = F.when(
+            F.size(ws) >= 2,  # ascending-sequence guard (see text.py)
+            F.transform(
+                F.sequence(F.lit(1), F.size(ws) - F.lit(1)),
+                lambda i: F.concat_ws(
+                    " ", F.element_at(ws, i), F.element_at(ws, i + F.lit(1))
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # materialize the gram array as a real column before the fold
-    # references it (unmaterialized-expression trap, CLAUDE.md)
-    g = toks.select("doc_id", "lang", F.concat(ws, bigrams).alias("gs"))
-    gs = F.col("gs")
-    score_sum = F.aggregate(
-        gs,
-        F.lit(0).cast("long"),
-        lambda acc, gr: acc + (spark_md5_hash48(gr) % LINW_RANGE - F.lit(1000)),
-    )
-    out = g.select(
-        "doc_id",
-        "lang",
-        F.size(gs).cast("long").alias("n_feats"),
-        score_sum.alias("score_sum"),
-    )
-    out = out.select(
-        "doc_id",
-        "lang",
-        "n_feats",
-        "score_sum",
-        F.round(F.col("score_sum").cast("double") / F.col("n_feats"), 9).alias(
-            "mean_w"
-        ),
-        F.when(F.col("score_sum") >= 0, F.lit("keep"))
-        .otherwise(F.lit("drop"))
-        .alias("verdict"),
-    )
-    out = out.persist()
-    out.count()  # materialize: consumers join/aggregate it repeatedly
-    _SCORE_CACHE[key] = out
-    return out
+        ).otherwise(F.array().cast("array<string>"))
+        # materialize the gram array as a real column before the fold
+        # references it (unmaterialized-expression trap, CLAUDE.md)
+        g = toks.select("doc_id", "lang", F.concat(ws, bigrams).alias("gs"))
+        gs = F.col("gs")
+        score_sum = F.aggregate(
+            gs,
+            F.lit(0).cast("long"),
+            lambda acc, gr: acc + (spark_md5_hash48(gr) % LINW_RANGE - F.lit(1000)),
+        )
+        out = g.select(
+            "doc_id",
+            "lang",
+            F.size(gs).cast("long").alias("n_feats"),
+            score_sum.alias("score_sum"),
+        )
+        out = out.select(
+            "doc_id",
+            "lang",
+            "n_feats",
+            "score_sum",
+            F.round(F.col("score_sum").cast("double") / F.col("n_feats"), 9).alias(
+                "mean_w"
+            ),
+            F.when(F.col("score_sum") >= 0, F.lit("keep"))
+            .otherwise(F.lit("drop"))
+            .alias("verdict"),
+        )
+        out = out.persist()
+        out.count()  # materialize: consumers join/aggregate it repeatedly
+        return out
+
+    return session_cache("hashed_scores", spark, sf_dir, build)
 
 
 # --- split-conformal prediction interval --------------------------------------------

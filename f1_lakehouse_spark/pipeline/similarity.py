@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from f1_lakehouse_spark.pipeline.hashing import spark_salted_hash, sql_salted_hash
 from f1_lakehouse_spark.registry import REGISTRY, register
+from f1_lakehouse_spark.session import session_cache
 from f1_lakehouse_spark.tables import load_table
 
 QUERY_VEC_ID = 0  # the corpus vector used as the search query
@@ -758,38 +759,27 @@ def _spark_update(assigned: DataFrame) -> dict[int, list[float]]:
     return model
 
 
-# Cached like _PQ_MODEL_CACHE / top_pc_vector: the coarse quantizer is the
-# same trained model for every consumer (ann_ivf_kmeans, semdedup), and the
-# model is driver-side tiny (K x DIM floats).
-_KMEANS_CACHE: dict[tuple[str, str], dict[int, list[float]]] = {}
-
-
+# Session-cached like the PQ models / top_pc_vector: the coarse quantizer
+# is the same trained model for every consumer (ann_ivf_kmeans, semdedup),
+# and the model is driver-side tiny (K x DIM floats).
 def _train_kmeans(
-    e: DataFrame, spark: SparkSession | None = None, sf_dir: str | None = None
+    e: DataFrame, spark: SparkSession, sf_dir: str
 ) -> dict[int, list[float]]:
     """K corpus-seeded centroids after KMEANS_ITERS Lloyd iterations — the
-    deterministic training chain shared by ann_ivf_kmeans and semdedup.
-    Pass (spark, sf_dir) to hit the (session, input) model cache; on a
-    miss the frame is persisted for the iteration scans."""
-    key = None
-    if spark is not None and sf_dir is not None:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        hit = _KMEANS_CACHE.get(key)
-        if hit is not None:
-            return hit
-        _KMEANS_CACHE.clear()  # one entry: model rolls over on input change
-    own = key is not None
-    if own:
-        e = e.persist()
+    deterministic training chain shared by ann_ivf_kmeans and semdedup,
+    session-cached; on a miss ``e`` is persisted for the iteration scans."""
+
+    def build() -> dict[int, list[float]]:
+        e.persist()
         e.count()  # materialize: assign+update scan per iteration
-    seeds = e.filter(F.col("vec_id") < KMEANS_K).collect()
-    model = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in seeds}
-    for _ in range(KMEANS_ITERS):
-        model = _spark_update(_spark_assign(e, model))
-    if own:
+        seeds = e.filter(F.col("vec_id") < KMEANS_K).collect()
+        model = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in seeds}
+        for _ in range(KMEANS_ITERS):
+            model = _spark_update(_spark_assign(e, model))
         e.unpersist()
-        _KMEANS_CACHE[key] = model
-    return model
+        return model
+
+    return session_cache("kmeans_model", spark, sf_dir, build)
 
 
 @register(
@@ -1129,46 +1119,38 @@ def _pq_adc_scored(
 # seed collect already carries) are identical for every PQ consumer in a
 # session — ADC top-k, rerank, distortion audit, the composed IVF-PQ chain
 # and its recall measurement — yet each call re-ran the PQ_M training
-# scans. One (session, input)-keyed cache of the DRIVER-SIDE model (tiny:
-# PQ_M x PQ_K x SUBDIM floats, no executor storage), same discipline as
-# text.char_trigram_frame / top_pc_vector.
-_PQ_MODEL_CACHE: dict[
-    tuple[str, str], tuple[list[dict[int, list[float]]], list[float]]
-] = {}
-
-
+# scans. The session-cached value is the DRIVER-SIDE model (tiny:
+# PQ_M x PQ_K x SUBDIM floats, no executor storage).
 def _pq_trained_models(
     spark: SparkSession, sf_dir: str, e: DataFrame
 ) -> tuple[list[dict[int, list[float]]], list[float]]:
     """([per-subspace trained codebooks], query embedding), cached per
     (session, sf_dir); on a miss the embeddings frame is persisted for the
     PQ_M training scans and released before returning."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _PQ_MODEL_CACHE.clear()  # one entry: model rolls over on input change
-    e = e.persist()
-    e.count()  # materialize: scanned once per subspace below
-    seed_rows = e.filter(F.col("vec_id") < PQ_K).collect()
-    seeds = {
-        m: {
-            int(r["vec_id"]): [float(x) for x in r["embedding"]][
-                m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM
-            ]
-            for r in seed_rows
+
+    def build() -> tuple[list[dict[int, list[float]]], list[float]]:
+        e.persist()
+        e.count()  # materialize: scanned once per subspace below
+        seed_rows = e.filter(F.col("vec_id") < PQ_K).collect()
+        seeds = {
+            m: {
+                int(r["vec_id"]): [float(x) for x in r["embedding"]][
+                    m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM
+                ]
+                for r in seed_rows
+            }
+            for m in range(PQ_M)
         }
-        for m in range(PQ_M)
-    }
-    q_emb = next(
-        [float(x) for x in r["embedding"]]
-        for r in seed_rows
-        if int(r["vec_id"]) == QUERY_VEC_ID
-    )
-    trained_list = [_pq_update(e, seeds[m], m) for m in range(PQ_M)]
-    e.unpersist()
-    _PQ_MODEL_CACHE[key] = (trained_list, q_emb)
-    return trained_list, q_emb
+        q_emb = next(
+            [float(x) for x in r["embedding"]]
+            for r in seed_rows
+            if int(r["vec_id"]) == QUERY_VEC_ID
+        )
+        trained_list = [_pq_update(e, seeds[m], m) for m in range(PQ_M)]
+        e.unpersist()
+        return trained_list, q_emb
+
+    return session_cache("pq_models", spark, sf_dir, build)
 
 
 def _pq_adc_expr(
@@ -1802,13 +1784,9 @@ def _spark_pi_update(e: DataFrame, v: list[float]) -> list[float]:
 
 # Both spectral queries train the SAME top-PC vector (the deflation op
 # projects it out of every iterate), so the trained model — a DIM-sized
-# Python list, driver-side only, no executor storage — is shared through a
-# single-entry cache keyed by (session, input), the same discipline as
-# text.char_trigram_frame. Whichever spectral query runs first pays the
-# PI_ITERS corpus scans; the other reuses the vector for free.
-_TOP_PC_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
+# Python list, driver-side only, no executor storage — is session-cached.
+# Whichever spectral query runs first pays the PI_ITERS corpus scans; the
+# other reuses the vector for free.
 def top_pc_vector(
     spark: SparkSession, sf_dir: str, e: DataFrame | None = None
 ) -> list[float]:
@@ -1819,22 +1797,20 @@ def top_pc_vector(
     per the self-join/iteration discipline) its own frame for the
     iterations and unpersists it before returning.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TOP_PC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _TOP_PC_CACHE.clear()  # one entry: model rolls over on input change
-    own = e is None
-    if own:
-        e = load_table(spark, sf_dir, "embeddings").persist()
-        e.count()  # materialize: scanned PI_ITERS times
-    v = [_PI_V0] * DIM
-    for _ in range(PI_ITERS):
-        v = _spark_pi_update(e, v)
-    if own:
-        e.unpersist()
-    _TOP_PC_CACHE[key] = v
-    return v
+
+    def build() -> list[float]:
+        frame = e
+        if e is None:
+            frame = load_table(spark, sf_dir, "embeddings").persist()
+            frame.count()  # materialize: scanned PI_ITERS times
+        v = [_PI_V0] * DIM
+        for _ in range(PI_ITERS):
+            v = _spark_pi_update(frame, v)
+        if e is None:
+            frame.unpersist()
+        return v
+
+    return session_cache("top_pc", spark, sf_dir, build)
 
 
 @register(

@@ -17,6 +17,7 @@ from f1_lakehouse_spark.pipeline.hashing import (
     sql_poly_hash,
 )
 from f1_lakehouse_spark.registry import register
+from f1_lakehouse_spark.session import session_cache
 from f1_lakehouse_spark.tables import load_table
 
 # --- token counting ------------------------------------------------------------
@@ -173,22 +174,17 @@ FROM best GROUP BY 1, 2
     tags=("pipeline", "text", "langid"),
 )
 def text_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered entry: the (session, sf_dir)-cached PINNED confusion
-    frame. The matrix is |langs|^2 rows but costs a full corpus classify
-    to build, and it has two registered consumers (this query and
-    text_lang_id_macro_f1) — the shared-cache roster pattern. The cache
-    stores a pin_small_result LocalRelation, so unlike the persisted
-    frames there is nothing to unpersist on rollover."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CONFUSION_CACHE.get(key)
-    if hit is None:
-        _CONFUSION_CACHE.clear()
-        hit = pin_small_result(_confusion_build(spark, sf_dir), 64)
-        _CONFUSION_CACHE[key] = hit
-    return hit
-
-
-_CONFUSION_CACHE: dict[tuple[str, str], DataFrame] = {}
+    """Registered entry: the session-cached PINNED confusion frame. The
+    matrix is |langs|^2 rows but costs a full corpus classify to build,
+    and it has two registered consumers (this query and
+    text_lang_id_macro_f1). The cache stores a pin_small_result
+    LocalRelation, so its rollover unpersist releases nothing."""
+    return session_cache(
+        "lang_id_confusion",
+        spark,
+        sf_dir,
+        lambda: pin_small_result(_confusion_build(spark, sf_dir), 64),
+    )
 
 
 def _confusion_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,13 +228,7 @@ def _confusion_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Both trained-model text queries (chargram lang-ID profiles, trigram-LM
 # surprisal — and any future model-based filter) start from the identical
 # exploded (doc_id, lang, g) frame; building it twice costs a full corpus
-# scan + explode each. One persisted, materialized frame is shared through
-# a single-entry cache (keyed by session + sf_dir; switching inputs
-# unpersists the previous frame, so executor storage holds at most one
-# corpus's grams — no session-lifetime leak across datasets).
-
-
-_TRIGRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
+# scan + explode each.
 
 
 def char_trigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,24 +238,21 @@ def char_trigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     because Spark's sequence(1, n) runs DESCENDING for n < 1 and would
     fabricate phantom grams where DuckDB's generate_series is empty (same
     guard as _spark_shingle_keys)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TRIGRAM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_TRIGRAM_CACHE):
-        _TRIGRAM_CACHE.pop(old_key).unpersist()
-    d = load_table(spark, sf_dir, "documents")
-    grams_arr = F.transform(
-        F.sequence(F.lit(1), F.length("text") - F.lit(2)),
-        lambda i: F.col("text").substr(i, F.lit(3)),
-    )
-    grams_arr = F.when(F.length("text") >= 3, grams_arr).otherwise(
-        F.array().cast("array<string>")
-    )
-    grams = d.select("doc_id", "lang", F.explode(grams_arr).alias("g")).persist()
-    grams.count()  # materialize: every consumer self-joins against it
-    _TRIGRAM_CACHE[key] = grams
-    return grams
+
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        grams_arr = F.transform(
+            F.sequence(F.lit(1), F.length("text") - F.lit(2)),
+            lambda i: F.col("text").substr(i, F.lit(3)),
+        )
+        grams_arr = F.when(F.length("text") >= 3, grams_arr).otherwise(
+            F.array().cast("array<string>")
+        )
+        grams = d.select("doc_id", "lang", F.explode(grams_arr).alias("g")).persist()
+        grams.count()  # materialize: every consumer self-joins against it
+        return grams
+
+    return session_cache("char_trigrams", spark, sf_dir, build)
 
 
 @register(
@@ -658,75 +645,67 @@ p3 AS ({_sql_bpe_pairs("w2")}),
 w3 AS ({_sql_bpe_merge("w2", "p3")})"""
 
 
-# Trained-model cache, same single-entry discipline as _TRIGRAM_CACHE:
-# both BPE queries (merges table, encode/apply) consume the identical
+# Both BPE queries (merges table, encode/apply) consume the identical
 # trained vocabulary; training runs the iterative merge loop (3 actions +
 # a driver round-trip each), so sharing it saves a full re-train per
-# consumer. Consumers must NOT unpersist the returned frame (CLAUDE.md
-# shared-frame convention); the cache rolls over on input change.
-_BPE_CACHE: dict[tuple[str, str], tuple[DataFrame, list]] = {}
-
-
+# consumer.
 def bpe_trained_frame(spark: SparkSession, sf_dir: str):
     """Trained BPE state: (final (w, cnt, seq) DataFrame — persisted,
     shared, do not unpersist — and the merge list
     [(iteration, a, b, weighted_count)])."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_BPE_CACHE):
-        _BPE_CACHE.pop(old_key)[0].unpersist()
-    d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    seqs = words.select(
-        "w",
-        "cnt",
-        F.concat(F.array_join(F.split("w", ""), _D), F.lit(_D)).alias("seq"),
-    )
-    # the word-frequency table is re-read every iteration: persist once
-    seqs = seqs.persist()
-    seqs.count()
-    merges: list[tuple[int, str, str, int]] = []
-    for it in range(1, BPE_ITERS + 1):
-        ls = F.split("seq", _D)  # trailing empty element: symbols = size-1
-        pair_arr = F.when(
-            F.size(ls) >= 3,
-            F.transform(
-                F.sequence(F.lit(1), F.size(ls) - F.lit(2)),
-                lambda i: F.struct(
-                    F.element_at(ls, i).alias("a"),
-                    F.element_at(ls, i + F.lit(1)).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        top = (
-            seqs.select("cnt", F.explode(pair_arr).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("total"))
-            .orderBy(F.col("total").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(1)
-            .collect()[0]
+
+    def build() -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
+        d = load_table(spark, sf_dir, "documents")
+        words = (
+            d.select(F.explode(F.split("text", " ")).alias("w"))
+            .groupBy("w")
+            .agg(F.count("*").alias("cnt"))
         )
-        merges.append((it, top["a"], top["b"], int(top["total"])))
-        merged = seqs.select(
+        seqs = words.select(
             "w",
             "cnt",
-            F.replace(
-                F.col("seq"),
-                F.lit(top["a"] + _D + top["b"] + _D),
-                F.lit(top["a"] + top["b"] + _D),
-            ).alias("seq"),
-        ).persist()
-        merged.count()
-        seqs.unpersist()
-        seqs = merged
-    _BPE_CACHE[key] = (seqs, merges)
-    return seqs, merges
+            F.concat(F.array_join(F.split("w", ""), _D), F.lit(_D)).alias("seq"),
+        )
+        # the word-frequency table is re-read every iteration: persist once
+        seqs = seqs.persist()
+        seqs.count()
+        merges: list[tuple[int, str, str, int]] = []
+        for it in range(1, BPE_ITERS + 1):
+            ls = F.split("seq", _D)  # trailing empty element: symbols = size-1
+            pair_arr = F.when(
+                F.size(ls) >= 3,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(ls) - F.lit(2)),
+                    lambda i: F.struct(
+                        F.element_at(ls, i).alias("a"),
+                        F.element_at(ls, i + F.lit(1)).alias("b"),
+                    ),
+                ),
+            ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
+            top = (
+                seqs.select("cnt", F.explode(pair_arr).alias("p"))
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("cnt").alias("total"))
+                .orderBy(F.col("total").desc(), F.col("a").asc(), F.col("b").asc())
+                .limit(1)
+                .collect()[0]
+            )
+            merges.append((it, top["a"], top["b"], int(top["total"])))
+            merged = seqs.select(
+                "w",
+                "cnt",
+                F.replace(
+                    F.col("seq"),
+                    F.lit(top["a"] + _D + top["b"] + _D),
+                    F.lit(top["a"] + top["b"] + _D),
+                ).alias("seq"),
+            ).persist()
+            merged.count()
+            seqs.unpersist()
+            seqs = merged
+        return seqs, merges
+
+    return session_cache("bpe_trained", spark, sf_dir, build)
 
 
 @register(

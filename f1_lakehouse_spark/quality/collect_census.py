@@ -85,11 +85,11 @@ ALLOWLIST: dict[tuple[str, str], str] = {
     "calibration-split quantile probes (fixed alpha grid)",
     ("pipeline/similarity.py", "_spark_update"): "model-sized: k-means "
     "centroid frame (k x dim)",
-    ("pipeline/similarity.py", "_train_kmeans"): "model-sized: seed sample "
+    ("pipeline/similarity.py", "_train_kmeans.build"): "model-sized: seed sample "
     "via rank-sample limit(k)",
     ("pipeline/similarity.py", "_pq_update"): "model-sized: PQ codebook "
     "(subspaces x 2^bits)",
-    ("pipeline/similarity.py", "_pq_trained_models"): "model-sized: trained "
+    ("pipeline/similarity.py", "_pq_trained_models.build"): "model-sized: trained "
     "codebook tables",
     ("pipeline/similarity.py", "_spark_pi_update"): "model-sized: one "
     "dim-length power-iteration vector",
@@ -107,7 +107,7 @@ ALLOWLIST: dict[tuple[str, str], str] = {
     "bounded query anchor set (plan-visible limit)",
     ("pipeline/similarity.py", "ann_ivfpq_recall"): "model-sized: bounded "
     "query anchor set (plan-visible limit)",
-    ("pipeline/text.py", "bpe_trained_frame"): "model-sized: merge table "
+    ("pipeline/text.py", "bpe_trained_frame.build"): "model-sized: merge table "
     "(vocab-budget rows, a training hyperparameter)",
     ("quality/checks.py", "run_not_null_suite"): "model-sized: one row per "
     "declared check (the suite is source code, not data)",

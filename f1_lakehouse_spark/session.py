@@ -16,10 +16,14 @@ Semantics parity notes (vs the reference's DuckDB executor, SURVEY.md §4):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -68,6 +72,46 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# --- shared (session, input) cache ---------------------------------------------------
+# name -> ((applicationId, sf_dir), value). One slot per name: a
+# multi-consumer family (docs/SCALE.md "Shared-frame cache roster") keeps
+# exactly one built result, so executor storage holds at most one corpus's
+# frame per name and never leaks across inputs or sessions.
+_SESSION_CACHE: dict[str, tuple[tuple[str, str], object]] = {}
+
+
+def _release(value: object) -> None:
+    """Unpersist every DataFrame in an evicted value (a DataFrame or a
+    tuple holding some); driver-side models have nothing to release."""
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            v.unpersist()
+
+
+def session_cache(
+    name: str, spark: SparkSession, sf_dir: str, build: Callable[[], T]
+) -> T:
+    """The value ``build()`` returns for (this session, ``sf_dir``), built
+    once and shared by every consumer of slot ``name``.
+
+    On a miss the slot's previous value is released BEFORE ``build()``
+    runs (peak storage stays one corpus per name), then the result is
+    stored. ``build`` does its own persist + materialize; consumers borrow
+    the returned frame and must never unpersist it. Builds may nest — a
+    build that reads another slot never evicts anything but its own name.
+    """
+    key = (spark.sparkContext.applicationId, sf_dir)
+    slot = _SESSION_CACHE.get(name)
+    if slot is not None:
+        if slot[0] == key:
+            return slot[1]  # type: ignore[return-value]
+        del _SESSION_CACHE[name]
+        _release(slot[1])
+    value = build()
+    _SESSION_CACHE[name] = (key, value)
+    return value
 
 
 # --- input-volume-derived shuffle sizing --------------------------------------------

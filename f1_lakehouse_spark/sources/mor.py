@@ -110,6 +110,16 @@ def base_dir(table_dir: str) -> str:
     return os.path.join(table_dir, _gen_name(_live_gen(table_dir)), "base")
 
 
+def _base_columns(table_dir: str) -> list[str]:
+    """The live base's column names, from one data file's parquet footer
+    (driver-side: no Spark job)."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    bdir = base_dir(table_dir)
+    part = min(f for f in os.listdir(bdir) if f.endswith(".parquet"))
+    return pq.read_schema(os.path.join(bdir, part)).names
+
+
 def mor_write_base(df: DataFrame, table_dir: str) -> None:
     """Materialize generation 0 and point the table at it."""
     os.makedirs(table_dir, exist_ok=True)
@@ -307,12 +317,20 @@ def mor_upsert(
     lower-seq row with the same key (latest-wins by sequence number), so
     no separate delete file is needed and a crash can never publish half
     the MERGE — matched keys update, unmatched keys insert, in the same
-    commit. ``rows`` must carry the base schema and unique keys (asserted:
-    two rows for one key in one batch would make latest-wins ambiguous).
-    Returns the number of rows committed."""
+    commit. ``rows`` must carry the base's columns (checked: a fragment
+    with other columns would commit and then break every ``mor_read``
+    union) and unique keys (checked: two rows for one key in one batch
+    would make latest-wins ambiguous). Returns the number of rows
+    committed."""
     # validate the INPUT once, before any staging I/O — the invariant is
     # about the caller's frame, and re-checking per displacement retry
     # would repeat two read jobs for an unchanged answer
+    base_cols = _base_columns(table_dir)
+    if sorted(rows.columns) != sorted(base_cols):
+        raise ValueError(
+            f"upsert batch columns {rows.columns} do not match the base "
+            f"columns {base_cols}"
+        )
     n = rows.count()
     n_keys = rows.select(key_col).distinct().count()
     if n_keys != n:

@@ -326,6 +326,25 @@ def test_mor_upsert_update_insert_delete_reinsert(spark, tmp_path):
     assert sorted(pinned.items()) == pre
 
 
+def test_mor_upsert_rejects_a_batch_off_the_base_schema(spark, tmp_path):
+    from f1_lakehouse_spark.sources.mor import _insert_files, mor_read, mor_upsert
+
+    tbl = _mor_base(spark, tmp_path)
+
+    def view():
+        return sorted((r["id"], r["grp"]) for r in mor_read(spark, tbl, "id").collect())
+
+    before = view()
+    extra = spark.createDataFrame([(3, 99, "x")], "id int, grp int, note string")
+    missing = spark.createDataFrame([(3,)], "id int")
+    for batch in (extra, missing):
+        with pytest.raises(ValueError, match="base columns"):
+            mor_upsert(spark, tbl, "id", batch)
+    # nothing was committed, so the merged view still unions cleanly
+    assert _insert_files(tbl, 0) == []
+    assert view() == before
+
+
 def test_mor_upsert_rejects_duplicate_keys(spark, tmp_path):
     from f1_lakehouse_spark.sources.mor import mor_upsert
 

@@ -384,6 +384,7 @@ def test_shared_frame_caches_hit_and_roll_over(spark):
     """The r8 shared-frame caches must return the SAME persisted frame on
     repeat calls (cache hit — the whole point) and roll over to a single
     entry when the input dir changes (no session-lifetime storage leak)."""
+    from f1_lakehouse_spark import session as SS
     from f1_lakehouse_spark.pipeline import dedup as D
     from f1_lakehouse_spark.pipeline import scoring as S
 
@@ -401,7 +402,9 @@ def test_shared_frame_caches_hit_and_roll_over(spark):
     other = "/root/testdata/sf0.01"
     d2 = S.hashed_score_frame(spark, other)
     assert d2 is not a
-    assert len(S._SCORE_CACHE) == 1
+    assert SS._SESSION_CACHE["hashed_scores"][0] == (
+        spark.sparkContext.applicationId, other
+    )
     # the evicted frame is unpersisted (storage released)
     assert not a.is_cached
     # restore the sf0.001 entry so later tests in this session start clean
